@@ -72,26 +72,30 @@ object AdaptiveCache {
     // API safe for concurrent callers too. Lock order is always
     // handoff -> bracket (CacheLifecycle's repersist path takes them
     // in the same order).
-    CacheLifecycle.withHandoff(df) {
-      bracketLock.synchronized {
-        val conf = df.sparkSession.conf
-        val prev = conf.getOption(Key)
-        conf.set(Key, "true")
-        try df.persist()
-        finally prev match {
-          case Some(v) => conf.set(Key, v)
-          case None    => conf.unset(Key)
-        }
+    CacheLifecycle.withHandoff(df)(bracketPersist(df))
+  }
+
+  private def bracketPersist(df: DataFrame): DataFrame =
+    bracketLock.synchronized {
+      val conf = df.sparkSession.conf
+      val prev = conf.getOption(Key)
+      conf.set(Key, "true")
+      try df.persist()
+      finally prev match {
+        case Some(v) => conf.set(Key, v)
+        case None    => conf.unset(Key)
       }
     }
-  }
 
   /** Re-persist with the SAME discipline `df` was originally persisted
     * under: bracketed when it went through [[persistByteAdaptive]],
-    * plain otherwise. Used by [[CacheLifecycle]] when a registration
-    * steal has just dropped the cache entry a fresh pass shares.
+    * plain otherwise. Used by [[CacheLifecycle]]'s registration re-pin,
+    * which already holds the hand-off lock and has just put its own
+    * claim on `df`'s plan: so no steal here, which would release that
+    * very claim (unpersisting the registration's caches and leaving
+    * this re-pin without an owner).
     */
   private[graft] def repersist(df: DataFrame): Unit =
-    if (censusFrames.containsKey(df)) { persistByteAdaptive(df); () }
+    if (censusFrames.containsKey(df)) { bracketPersist(df); () }
     else { df.persist(); () }
 }

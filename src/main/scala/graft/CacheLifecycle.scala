@@ -72,6 +72,10 @@ object CacheLifecycle {
     if (prior ne null) prior()
   }
 
+  /** Whether a release claim on `df`'s canonicalized plan is pending. */
+  private[graft] def hasPendingClaim(df: DataFrame): Boolean =
+    pending.containsKey(df.queryExecution.analyzed.canonicalized)
+
   /** Persist with a deterministic cache hand-off: a stale pending
     * claim on the same canonicalized plan (a PRIOR invocation whose
     * release event is still in flight on the lagging listener bus) is
@@ -169,7 +173,9 @@ object CacheLifecycle {
     // steal (or an already-landed stale release) left unpersisted, so
     // THIS invocation recomputes into a fresh entry instead of running
     // uncached. Under the lock so a stale release body cannot
-    // interleave between the storageLevel check and the re-pin.
+    // interleave between the storageLevel check and the re-pin. The
+    // re-pin itself must not steal: the claim now pending on these
+    // plans is this registration's own.
     handoffLock.synchronized {
       keys.foreach { k =>
         val prior = pending.put(k, releaseFn)

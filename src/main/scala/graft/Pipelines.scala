@@ -7,7 +7,7 @@ import graft.operators.Freshness
 import graft.operators.Freshness.FreshnessSpec
 import graft.operators.Reconciliation
 import graft.operators.Reconciliation.CensusSpec
-import graft.sources.{FanOut, Sinks}
+import graft.sources.{FanOut, ParquetFooters, Sinks}
 
 /** The reference's two entry-point flows (SURVEY.md §3), end to end:
   * multi-source discovery → fan-out with per-source skip → check →
@@ -17,8 +17,14 @@ import graft.sources.{FanOut, Sinks}
   *
   * Where the reference visits sources in a sequential Python loop and
   * eagerly materializes between steps, here every run is ONE lazy
-  * Catalyst plan: per-source subtrees execute as parallel stages, and
-  * the only materialization is the sink write.
+  * Catalyst plan, and the work splits in two:
+  *  - on the driver, no Spark job: source discovery (a directory
+  *    listing), each source table's schema (its parquet footer, via
+  *    [[ParquetFooters.read]]), the per-source skip decision, and the
+  *    sink's verify count (the written files' footers, via
+  *    [[ParquetFooters.rowCount]]);
+  *  - as Spark jobs: the sink write alone, in which the per-source
+  *    subtrees execute as parallel stages.
   */
 object Pipelines {
 
@@ -42,18 +48,7 @@ object Pipelines {
       cutoff: Column,
       outPath: String): RunReport = {
     val sources = FanOut.discoverSources(sourcesRoot, sourcePrefix)
-    val fanned = FanOut.fanOut(sources, { src =>
-      val specs = factTables.map { case (t, tsCol) =>
-        FreshnessSpec(t, spark.read.parquet(s"$sourcesRoot/$src/$t"), col(tsCol), cutoff)
-      }
-      Freshness.loadingStatus(
-        // facility identity = the source itself (the config-lookup
-        // analog when no global_property-style table exists)
-        spark.range(1).select(
-          pmod(xxhash64(lit(src)), lit(Int.MaxValue)).cast("int").as("facility_id"),
-          lit(src).as("facility_name")),
-        specs, cutoff)
-    })
+    val fanned = FanOut.fanOut(sources, freshnessSource(spark, sourcesRoot, factTables, cutoff))
     val written = fanned.df match {
       case None => 0L
       case Some(longDf) =>
@@ -79,12 +74,7 @@ object Pipelines {
       destination: DataFrame, // (site_id, table_name, record_count)
       outPath: String): RunReport = {
     val sources = FanOut.discoverSources(sourcesRoot, sourcePrefix)
-    val fanned = FanOut.fanOut(sources, { src =>
-      Reconciliation.censusUnion(censusTables.map { case (t, voidedCol) =>
-        CensusSpec(t, spark.read.parquet(s"$sourcesRoot/$src/$t"),
-          pmod(xxhash64(lit(src)), lit(Int.MaxValue)).cast("int"), voidedCol.map(c => col(c) === 0))
-      })
-    })
+    val fanned = FanOut.fanOut(sources, reconciliationSource(spark, sourcesRoot, censusTables))
     val written = fanned.df match {
       case None => 0L
       case Some(srcCounts) =>
@@ -93,5 +83,31 @@ object Pipelines {
         Sinks.writeAppend(report, outPath)
     }
     RunReport(written, sources.size, fanned.skipped)
+  }
+
+  /** One source's loading-status plan for [[freshnessPipeline]]. */
+  private[graft] def freshnessSource(
+      spark: SparkSession, sourcesRoot: String,
+      factTables: Seq[(String, String)], cutoff: Column): String => DataFrame = { src =>
+    val specs = factTables.map { case (t, tsCol) =>
+      FreshnessSpec(t, ParquetFooters.read(spark, s"$sourcesRoot/$src/$t"), col(tsCol), cutoff)
+    }
+    Freshness.loadingStatus(
+      // facility identity = the source itself (the config-lookup
+      // analog when no global_property-style table exists)
+      spark.range(1).select(
+        pmod(xxhash64(lit(src)), lit(Int.MaxValue)).cast("int").as("facility_id"),
+        lit(src).as("facility_name")),
+      specs, cutoff)
+  }
+
+  /** One source's census plan for [[reconciliationPipeline]]. */
+  private[graft] def reconciliationSource(
+      spark: SparkSession, sourcesRoot: String,
+      censusTables: Seq[(String, Option[String])]): String => DataFrame = { src =>
+    Reconciliation.censusUnion(censusTables.map { case (t, voidedCol) =>
+      CensusSpec(t, ParquetFooters.read(spark, s"$sourcesRoot/$src/$t"),
+        pmod(xxhash64(lit(src)), lit(Int.MaxValue)).cast("int"), voidedCol.map(c => col(c) === 0))
+    })
   }
 }

@@ -210,6 +210,12 @@ object DqFunctions {
     * fraction of agreeing components. Native one-loop expression (r21)
     * — value-identical to the previous zip_with + aggregate HOF pair,
     * without the boxed intermediate array per scored candidate pair.
+    *
+    * Both signatures must be `array<bigint>`, the type every signature
+    * builder here returns. Unlike the HOF pair it replaced, other
+    * element types (e.g. `array<int>`) fail analysis with
+    * "minhash_agreement requires two array<bigint>"; cast such input
+    * first.
     */
   def minhashAgreement(sigA: Column, sigB: Column): Column =
     MinhashAgreementExpression.minhashAgreementNative(sigA, sigB)

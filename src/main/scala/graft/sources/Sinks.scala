@@ -11,7 +11,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * then verifies with a COUNT(*) read-back (DCC:166-168).
   *
   * Parquet-native equivalents; `verifyCount=true` reproduces the
-  * read-back assertion and returns the persisted row count.
+  * read-back assertion and returns the persisted row count, summed
+  * from the written files' footers on the driver
+  * ([[ParquetFooters.rowCount]]) rather than by a scan job.
   */
 object Sinks {
 
@@ -32,17 +34,17 @@ object Sinks {
     // would otherwise silently inflate the rows-written delta.
     val before =
       if (!verifyCount) 0L
-      else try spark.read.parquet(path).count() catch {
+      else try ParquetFooters.rowCount(spark, path) catch {
         case e: org.apache.spark.sql.AnalysisException
             if e.getCondition == "PATH_NOT_FOUND" => 0L
       }
     df.write.mode(SaveMode.Append).parquet(path)
-    if (verifyCount) spark.read.parquet(path).count() - before else -1L
+    if (verifyCount) ParquetFooters.rowCount(spark, path) - before else -1L
   }
 
   private def write(df: DataFrame, path: String, mode: SaveMode, verify: Boolean): Long = {
     df.write.mode(mode).parquet(path)
-    if (verify) df.sparkSession.read.parquet(path).count() // S9 read-back
+    if (verify) ParquetFooters.rowCount(df.sparkSession, path) // S9 read-back
     else -1L
   }
 

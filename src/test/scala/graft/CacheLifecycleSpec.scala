@@ -129,6 +129,30 @@ class CacheLifecycleSpec extends AnyFunSuite {
       "B's own claim must still release after B executes")
   }
 
+  test("registration re-pins an unpersisted census without stealing its own claim") {
+    import graft.AdaptiveCache.CensusPersist
+    // the re-pin goes through the byte-adaptive bracket; it must not
+    // run the hand-off steal, whose pending claim is by then this very
+    // registration's: that steal released every cache of the
+    // registration at once and left the re-pinned census without an
+    // owner, pinned for good
+    val census = spark.range(400).selectExpr("id % 11 as k").groupBy("k").count()
+      .persistCensus()
+    census.unpersist(blocking = true) // e.g. a stale claim's release landed first
+    val trigger = census.selectExpr("sum(count) as s")
+    CacheLifecycle.releaseWhenExecuted(trigger, Seq(census))
+    assert(census.storageLevel != StorageLevel.NONE,
+      "registration must re-pin the census")
+    assert(CacheLifecycle.hasPendingClaim(census),
+      "the registration's own claim must stay pending until its trigger runs")
+    trigger.collect()
+    assert(eventually() { census.storageLevel == StorageLevel.NONE },
+      "the re-pinned census must be released once its trigger executed")
+    // the claim goes right after the unpersist, in the same release body
+    assert(eventually() { !CacheLifecycle.hasPendingClaim(census) },
+      "no claim may outlive the release")
+  }
+
   test("unrelated executions do not release caches prematurely") {
     val docs = Tables.documents(spark, TestSpark.sf).limit(40)
     val pairs = Dedup.lshCandidatePairs(docs, "doc_id", "text", numHashes = 16, bands = 4)

@@ -141,6 +141,19 @@ class DqFunctionsSpec extends AnyFunSuite {
     assert(nul.forall(_.isNullAt(0)))
   }
 
+  test("minhashAgreement requires array<bigint>: array<int> fails analysis with the stated message") {
+    val ints = Seq((Seq(1, 2, 3), Seq(1, 2, 4))).toDF("a", "b")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      ints.select(minhashAgreement($"a", $"b")).collect()
+    }
+    assert(e.getMessage.contains(
+      "minhash_agreement requires two array<bigint>, got array<int>, array<int>"), e.getMessage)
+    // the documented remedy: cast first
+    val cast = ints.select(minhashAgreement(
+      $"a".cast("array<bigint>"), $"b".cast("array<bigint>"))).as[Double].head()
+    assert(cast == 2.0 / 3.0)
+  }
+
   test("native MinhashFromBase equals the HOF transform+array_min composition") {
     import graft.functions.{DqFunctions, MinhashExpression}
     val docs = Tables.documents(spark, TestSpark.sf).limit(200)

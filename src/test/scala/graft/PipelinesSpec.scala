@@ -2,10 +2,14 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GraftFunctionRegistry
+import graft.sources.{FanOut, ParquetFooters}
 
 class PipelinesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -13,16 +17,52 @@ class PipelinesSpec extends AnyFunSuite {
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
-  test("freshness pipeline end-to-end: fan-out, skip, pivot, stddev, sink") {
+  private val fleetTables = Seq("obs", "encounter", "orders")
+
+  /** Three source schemas; `openmrs_partial` lacks two tables, so the
+    * fan-out skips it atomically.
+    */
+  private def fixtureFleet(): String = {
     val root = Files.createTempDirectory("dcc").toString
     def writeSrc(src: String, tables: Seq[String]): Unit =
       tables.foreach { t =>
-        Seq((1, ts("2020-01-10 00:00:00")), (2, ts("2020-03-01 00:00:00")))
-          .toDF("id", "event_ts").write.parquet(s"$root/$src/$t")
+        Seq((1, ts("2020-01-10 00:00:00"), 0), (2, ts("2020-03-01 00:00:00"), 1))
+          .toDF("id", "event_ts", "voided").write.parquet(s"$root/$src/$t")
       }
-    writeSrc("openmrs_a", Seq("obs", "encounter", "orders"))
-    writeSrc("openmrs_b", Seq("obs", "encounter", "orders"))
+    writeSrc("openmrs_a", fleetTables)
+    writeSrc("openmrs_b", fleetTables)
     writeSrc("openmrs_partial", Seq("obs")) // missing tables → schema skipped atomically
+    root
+  }
+
+  /** Spark jobs started by `body` on this thread, seen by a listener. */
+  private def jobsLaunchedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"job-count-${java.util.UUID.randomUUID}"
+    val sentinel = s"$group-sentinel"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job-count probe")
+      try body finally sc.clearJobGroup()
+      // the bus delivers in order: once the sentinel job's start has
+      // arrived, so has that of every job `body` started
+      sc.setJobGroup(sentinel, "job-count sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis + 15000
+      while (!seen.contains(sentinel) && System.currentTimeMillis < deadline) Thread.sleep(20)
+      assert(seen.contains(sentinel), "listener never saw the sentinel job")
+      seen.asScala.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("freshness pipeline end-to-end: fan-out, skip, pivot, stddev, sink") {
+    val root = fixtureFleet()
 
     val out = Files.createTempDirectory("dccout").toString + "/report"
     val report = Pipelines.freshnessPipeline(spark, root, "openmrs_",
@@ -38,6 +78,35 @@ class PipelinesSpec extends AnyFunSuite {
       "std_dev", "date_created"))
     // all three max-dates equal per row → stddev 0
     assert(persisted.select("std_dev").as[Double].collect().forall(_ == 0.0))
+  }
+
+  test("source resolution and sink read-back run on the driver: zero Spark jobs") {
+    val root = fixtureFleet()
+    val sources = FanOut.discoverSources(root, "openmrs_")
+    val cutoff = to_timestamp(lit("2021-01-01 00:00:00"))
+    // the probe is live: Spark's own parquet read infers its schema in a job
+    assert(jobsLaunchedBy(spark.read.parquet(s"$root/openmrs_a/obs")) >= 1)
+
+    var fanned = Seq.empty[FanOut.FanOutResult]
+    val resolveJobs = jobsLaunchedBy {
+      fanned = Seq(
+        FanOut.fanOut(sources,
+          Pipelines.freshnessSource(spark, root, fleetTables.map(_ -> "event_ts"), cutoff)),
+        FanOut.fanOut(sources,
+          Pipelines.reconciliationSource(spark, root, fleetTables.map(_ -> Some("voided")))))
+    }
+    assert(resolveJobs == 0, s"resolving ${sources.size} sources launched $resolveJobs jobs")
+    assert(fanned.forall(_.skipped.map(_.source) == Seq("openmrs_partial")))
+    assert(fanned.forall(_.df.isDefined))
+
+    val out = Files.createTempDirectory("dccjobs").toString + "/report"
+    val report = Pipelines.freshnessPipeline(spark, root, "openmrs_",
+      fleetTables.map(_ -> "event_ts"), cutoff, out)
+    assert(report.rowsWritten == 2)
+    var readBack = -1L
+    val verifyJobs = jobsLaunchedBy { readBack = ParquetFooters.rowCount(spark, out) }
+    assert(verifyJobs == 0, s"sink read-back launched $verifyJobs jobs")
+    assert(readBack == spark.read.parquet(out).count())
   }
 
   test("reconciliation pipeline end-to-end: census vs destination, append sink") {
